@@ -1,42 +1,29 @@
 """Order-insensitive result digests, and the DuckDB oracle that sets them.
 
-A digest is (row count, sha256 over the sorted, normalised rows with
-columns ordered by name). The oracle side runs a registered query's
-DuckDB SQL over the same parquet files the Spark side reads, once, in
-set-up; every timed op's collected result must reproduce it exactly.
+A digest is (row count, sha256 over the rows as the repository's
+Spark-vs-DuckDB comparison normalises them: columns ordered by name,
+values normalised, rows sorted; see ``tests/oracle_utils.py``). The
+oracle side runs a registered query's DuckDB SQL over the same parquet
+files the Spark side reads, once, in set-up; every timed op's collected
+result must reproduce it exactly.
 """
 
 from __future__ import annotations
 
-import decimal
 import hashlib
-import math
 import os
 
 import duckdb
 
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return "0.0" if v == 0 else repr(v)
-    if isinstance(v, decimal.Decimal):
-        return repr(float(v))
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return repr(v)
+from tests.oracle_utils import normalize_rows
 
 
 def digest(cols: list[str], rows) -> tuple[int, str]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    normed = sorted("\x1f".join(_norm(r[i]) for i in order) for r in rows)
+    normed = normalize_rows(cols, rows)
     h = hashlib.sha256()
     h.update("\x1f".join(sorted(cols)).encode())
-    for line in normed:
-        h.update(b"\n" + line.encode())
+    for row in normed:
+        h.update(b"\n" + "\x1f".join(row).encode())
     return len(normed), h.hexdigest()
 
 

@@ -1,6 +1,6 @@
 """The repository's benchmark: one command, one workload per run.
 
-    python3 perfbench/run.py --workload fred_monthly --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload fred_monthly --seed 1 --seconds 5 --trace 0
 
 Run from the root of a checkout. The run starts Spark on
 ``local[<cpus>]``, sets the workload up from the seed, warms it up, then
@@ -59,7 +59,6 @@ class Outcome:
 
     def __init__(self):
         self.times: list[float] = []  # successful ops' durations
-        self.labels: list[str] = []
         self.traced: list[bool] = []
         self.failed = 0
         self.attempted = 0
@@ -67,26 +66,21 @@ class Outcome:
         self.op_roots = []  # (root span, op spans, files) of traced ops
 
 
-def measure(wl, tracer, seconds: float, trace: bool, corrupt_ops=frozenset()) -> Outcome:
-    """Run whole rounds of ops until ``seconds`` have passed. With
-    ``trace``, every other op of each label is traced and the run ends
-    after an even number of rounds, so every label runs both ways. Ops in
-    ``corrupt_ops`` have their result corrupted before the check, which
-    must then fail."""
+def measure(wl, tracer, seconds: float, trace: bool, corrupt_ops=(), min_ops=1) -> Outcome:
+    """Run ops until ``seconds`` have passed and at least ``min_ops`` ops
+    ran. With ``trace``, every other op is traced and the run ends after
+    an even number of ops, so the op runs both ways. The k-th op in ``corrupt_ops`` has its result
+    corrupted (``wl.corrupt(res, k)``) before the check, which must then
+    fail."""
     from .trace import dir_snapshot, written
 
     spark = wl.spark
     out = Outcome()
     t_end = time.perf_counter() + seconds
     i = 0
-    rl = wl.round_len()
-    seen: dict[str, int] = {}
-    while i == 0 or time.perf_counter() < t_end or i % rl or (trace and (i // rl) % 2):
+    while i < min_ops or time.perf_counter() < t_end or (trace and i % 2):
         spark.catalog.clearCache()
-        label = wl.op_label(i)
-        # every other op of each label is traced
-        seen[label] = seen.get(label, 0) + 1
-        traced = trace and seen[label] % 2 == 0
+        traced = trace and i % 2 == 1
         tracer.enabled = traced
         tracer.op_id = i
         dirs = wl.traced_dirs() if traced else {}
@@ -105,7 +99,7 @@ def measure(wl, tracer, seconds: float, trace: bool, corrupt_ops=frozenset()) ->
                 tracer.restore()
                 tracer.enabled = False
             if i in corrupt_ops:
-                res = wl.corrupt(res)
+                res = wl.corrupt(res, sorted(corrupt_ops).index(i))
             errs = wl.check(res)
         except Exception as e:  # an op that raises is a failed op
             traceback.print_exc()
@@ -113,10 +107,9 @@ def measure(wl, tracer, seconds: float, trace: bool, corrupt_ops=frozenset()) ->
         out.attempted += 1
         if errs:
             out.failed += 1
-            out.errors.append(f"op {i} ({label}): {errs[0]}"[:500])
+            out.errors.append(f"op {i}: {errs[0]}"[:500])
         elif dt is not None:
             out.times.append(dt)
-            out.labels.append(label)
             out.traced.append(traced)
             if traced:
                 root.result = res
@@ -128,18 +121,27 @@ def measure(wl, tracer, seconds: float, trace: bool, corrupt_ops=frozenset()) ->
 
 
 def end_to_end(out: Outcome, setup_s: float, peak_rss: int) -> dict[str, tuple[float, str]]:
-    from .harness import percentile, tail_percentile
+    from .harness import percentile
 
     xs = sorted(out.times) or [0.0]  # every op failed: report zeros
     n = len(out.times)
-    q = tail_percentile(n)
     return {
         "setup_s": (setup_s, "session start + set-up + warm-up, n=1"),
         "ops_per_min": (60 * n / sum(xs) if n else 0.0, f"n={n} ops"),
         "op_p50_s": (percentile(xs, 50), f"n={n} ops"),
-        "op_tail_s": (percentile(xs, q), f"p{q}, n={n} ops"),
         "peak_rss_mb": (peak_rss / 2**20, "PSS of JVM + Python workers, sampled every 1 s"),
     }
+
+
+def op_tail(out: Outcome) -> tuple[float, str]:
+    """The highest percentile of op time with at least ten samples beyond
+    it. Printed only: a run measures too few ops for any percentile above
+    the median, so it is not one of BENCHMARK.json's metrics."""
+    from .harness import percentile, tail_percentile
+
+    n = len(out.times)
+    q = tail_percentile(n)
+    return percentile(sorted(out.times) or [0.0], q), f"p{q}, n={n} ops"
 
 
 def per_layer(wl, tracer, out: Outcome, session_s: float, names) -> dict[str, tuple[float, str]]:
@@ -161,19 +163,14 @@ def per_layer(wl, tracer, out: Outcome, session_s: float, names) -> dict[str, tu
 
 
 def _overhead(out: Outcome) -> tuple[float, str]:
-    """Median traced minus median untraced op time, per op label where
-    both kinds ran, averaged over labels."""
-    by: dict[tuple[str, bool], list[float]] = {}
-    for t, label, traced in zip(out.times, out.labels, out.traced):
-        by.setdefault((label, traced), []).append(t)
-    diffs = [
-        statistics.median(by[(label, True)]) - statistics.median(by[(label, False)])
-        for label in {lb for lb, _ in by}
-        if (label, True) in by and (label, False) in by
-    ]
-    if not diffs:
-        return 0.0, "no op label ran both traced and untraced"
-    return statistics.fmean(diffs), f"{len(diffs)} op labels"
+    """Median traced minus median untraced op time."""
+    by: dict[bool, list[float]] = {True: [], False: []}
+    for t, traced in zip(out.times, out.traced):
+        by[traced].append(t)
+    if not (by[True] and by[False]):
+        return 0.0, "no op ran both traced and untraced"
+    return (statistics.median(by[True]) - statistics.median(by[False]),
+            f"{len(by[True])} traced, {len(by[False])} untraced ops")
 
 
 def self_times(out: Outcome) -> list[tuple[str, float, int]]:
@@ -186,7 +183,7 @@ def self_times(out: Outcome) -> list[tuple[str, float, int]]:
     return sorted(((k, v / n, n) for k, v in tot.items()), key=lambda x: -x[1])
 
 
-def run(args, checkout: str, scale=None, corrupt_ops=frozenset()) -> dict:
+def run(args, checkout: str, scale=None, corrupt_ops=(), min_ops=1) -> dict:
     """One benchmark run inside a fresh workspace; returns the result
     object."""
     from .harness import RssSampler, Workspace, start_spark, stop_spark
@@ -217,7 +214,7 @@ def run(args, checkout: str, scale=None, corrupt_ops=frozenset()) -> dict:
                 setup_s = session_s + setup_only_s + warm_s
                 print(f"# setup: session {session_s:.3f}s, set-up {setup_only_s:.3f}s, "
                       f"warm-up {warm_s:.3f}s", flush=True)
-                out = measure(wl, tracer, args.seconds, bool(args.trace), corrupt_ops)
+                out = measure(wl, tracer, args.seconds, bool(args.trace), corrupt_ops, min_ops)
                 if args.trace:
                     metrics = per_layer(wl, tracer, out, session_s, layer_units)
                     tracer.dump(os.path.join(
@@ -228,8 +225,7 @@ def run(args, checkout: str, scale=None, corrupt_ops=frozenset()) -> dict:
     finally:
         ws.remove()
     print("# op times (s): " + " ".join(
-        f"{label}={t:.3f}{'*' if tr else ''}"
-        for t, label, tr in zip(out.times, out.labels, out.traced)), flush=True)
+        f"{t:.3f}{'*' if tr else ''}" for t, tr in zip(out.times, out.traced)), flush=True)
     for e in out.errors[:10]:
         print(f"# FAILED {e}", flush=True)
     if not args.trace:
@@ -242,6 +238,9 @@ def run(args, checkout: str, scale=None, corrupt_ops=frozenset()) -> dict:
         _emit(name, v, unit, note)
     _emit("failed_share", out.failed / out.attempted, "ratio",
           f"{out.failed} of {out.attempted} ops")
+    if not args.trace:
+        tail, note = op_tail(out)
+        _emit("op_tail_s", tail, "s", note)
     if args.trace:
         traced = [t for t, tr in zip(out.times, out.traced) if tr]
         wall = statistics.fmean(traced) if traced else 0.0

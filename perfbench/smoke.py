@@ -2,10 +2,12 @@
 
     python3 perfbench/smoke.py
 
-Runs one round of every workload on tiny inputs, from the root of a
-checkout, with the first op's result deliberately corrupted: every other
-op of the round must pass its check and the corrupted one must register
-as the run's single failed op. Exits non-zero on any other outcome.
+Runs every workload on tiny inputs, from the root of a checkout, for
+at least five ops, with the results of the first four
+deliberately corrupted, each in a different part (for ``fred_monthly``
+the gold lake, the manifest table, the Derby table and the sheet): the
+other ops must pass their checks and exactly the four corrupted ones
+must register as failed. Exits non-zero on any other outcome.
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+
+CORRUPT = (0, 1, 2, 3)  # the ops whose results are corrupted
 
 
 def main() -> int:
@@ -28,11 +32,12 @@ def main() -> int:
     bad = []
     for name in WORKLOADS:
         args = argparse.Namespace(workload=name, seed=1, seconds=0, trace=0)
-        res = run(args, checkout, scale=SMOKE, corrupt_ops=frozenset({0}))
-        ok = res["attempted"] >= 2 and res["failed"] == 1 and not res["correct"]
+        res = run(args, checkout, scale=SMOKE, corrupt_ops=CORRUPT, min_ops=len(CORRUPT) + 1)
+        ok = (res["attempted"] > len(CORRUPT) and res["failed"] == len(CORRUPT)
+              and not res["correct"])
         print(f"smoke {name}: {res['attempted']} ops, {res['failed']} failed "
-              f"(want one round of 2 or more ops, 1 failed): {'ok' if ok else 'FAIL'}",
-              flush=True)
+              f"(want {len(CORRUPT)} failed of {len(CORRUPT) + 1} or more): "
+              f"{'ok' if ok else 'FAIL'}", flush=True)
         if not ok:
             bad.append(name)
     return 1 if bad else 0

@@ -3,8 +3,9 @@
 Each workload builds its inputs from the seed in ``setup`` (into a fresh
 directory per set-up), runs one op per ``run_op`` call and checks the op's
 result in ``check`` — untimed, against expectations fixed before any op
-ran. ``corrupt`` perturbs a result the way a wrong answer would look, for
-the smoke test's proof that a bad result registers as a failed op.
+ran. ``corrupt`` perturbs one part of a result the way a wrong answer
+would look, a different part for each ``k``, for the smoke test's proof
+that a bad result in any checked store registers as a failed op.
 
 Every call into the program goes through a module or class attribute
 (``jobs.run_series``, ``lake.read_gold``, ``ManifestLakeTable.merge_into``)
@@ -24,15 +25,20 @@ from .tables import write_tables
 
 @dataclass
 class Scale:
-    """Input sizes; ``SMOKE`` shrinks every workload to tiny inputs."""
+    """Input sizes; ``SMOKE`` shrinks every workload to tiny inputs.
 
-    fred_series: int = 2
-    fred_history_years: int = 2
+    FRED: one series of each cadence (daily, weekly, monthly) with ten
+    years of history, so an op's full-history silver rewrite covers 120
+    month partitions, as in a deployment that has been running for years.
+    """
+
+    fred_series: int = 3
+    fred_history_years: int = 10
     n_docs: int = 600
     n_vecs: int = 400
 
 
-SMOKE = Scale(fred_series=2, fred_history_years=1, n_docs=200, n_vecs=100)
+SMOKE = Scale(fred_series=3, fred_history_years=1, n_docs=200, n_vecs=100)
 
 
 class Workload:
@@ -58,14 +64,7 @@ class Workload:
     def check(self, res) -> list[str]:
         raise NotImplementedError
 
-    def corrupt(self, res):
-        raise NotImplementedError
-
-    def op_label(self, i: int) -> str:
-        return self.name
-
-    def round_len(self) -> int:
-        """Ops per round of the mix; a run measures whole rounds."""
+    def corrupt(self, res, k: int):
         raise NotImplementedError
 
     def install_wrappers(self) -> None:
@@ -108,10 +107,12 @@ class MonthResult:
     gold: dict  # month -> (value, count) read back from the gold lake
     derby: dict  # month -> (value, count) in the serving table
     sheet: dict  # month -> (value, count) in the sheet for this year
+    manifest: dict  # month -> (value, count) in the manifest table
     appended: int
     offered: int
     fetch_calls: int
     sheet_dups: int = 0
+    manifest_dups: int = 0
     serving_read: bool = False
 
 
@@ -147,8 +148,12 @@ class FredMonthly(Workload):
         last = (start_year + self.scale.fred_history_years - 1, 12)
         history = list(fredgen.months_between(first, last))
         self.loaded = {s: list(history) for s in self.series}
+        # ops catch each series up two months at a time, in the catalog's
+        # cadence order (daily, monthly, weekly): a run's first op is its
+        # daily series for every seed, so runs differ in which series, not
+        # which cadence, and a traced run's untraced and traced ops are
+        # two consecutive months of the same series
         self.order = list(self.series)
-        self.rng.shuffle(self.order)
         self.input_bytes = 0
 
         # backfill: one jobs.run_series call per series over its whole
@@ -192,12 +197,10 @@ class FredMonthly(Workload):
         self.fetch_acc = sc.accumulator(0)
 
     def warmup(self) -> None:
-        errs = self.check(self.run_op(-1))
-        if errs:
-            raise RuntimeError(f"warm-up op failed its check: {errs[:3]}")
-
-    def round_len(self) -> int:
-        return len(self.series)  # one month of every series
+        """Set-up is the warm-up: the backfill runs every step of
+        ``run_series`` and the serving stores are seeded through the calls
+        an op makes, so the first op finds warm paths (measured: a
+        warm-up op ran no faster than the op after it)."""
 
     def _fetcher(self, table):
         acc = self.fetch_acc
@@ -215,7 +218,7 @@ class FredMonthly(Workload):
         from pyspark.sql import functions as F
 
         spark = self.spark
-        sid = self.order[i % len(self.order)]
+        sid = self.order[(i // 2) % len(self.order)]
         y, m = fredgen.next_month(*self.loaded[sid][-1])
         start, end = fredgen.month_range(y, m)
         table = self.feed.replay_table(sid, [(y, m)])
@@ -243,12 +246,23 @@ class FredMonthly(Workload):
             series_id=sid, year=y, month=m, counts=counts,
             gold={r["observation_month"]: (r["value"], r["observation_count"])
                   for r in gold_rows},
-            derby={}, sheet={}, appended=appended, offered=len(gold_rows),
+            derby={}, sheet={}, manifest={}, appended=appended,
+            offered=len(gold_rows),
             fetch_calls=self.fetch_acc.value - calls0,
         )
 
     def _serving_state(self, res: MonthResult) -> None:
-        """Read the Derby rows and sheet rows for the op's indicator-year."""
+        """Read the Derby, manifest-table and sheet rows for the op's
+        indicator-year."""
+        from pyspark.sql import functions as F
+
+        rows = self.table.read(self.spark).where(
+            (F.col("indicator") == F.lit(res.series_id))
+            & (F.col("observation_year") == F.lit(res.year))
+        ).select("observation_month", "value", "observation_count").collect()
+        for m, v, c in rows:
+            res.manifest_dups += m in res.manifest
+            res.manifest[m] = (v, c)
         jvm = self.spark._jvm
         conn = jvm.java.sql.DriverManager.getConnection(self.derby_url)
         try:
@@ -282,6 +296,7 @@ class FredMonthly(Workload):
         errs = fredgen.diff_rows(f"{sid} {y} gold", res.gold, want)
         errs += fredgen.diff_rows(f"{sid} {y} derby", res.derby, want)
         errs += fredgen.diff_rows(f"{sid} {y} sheet", res.sheet, want)
+        errs += fredgen.diff_rows(f"{sid} {y} manifest", res.manifest, want)
         n_bronze = sum(len(self.feed.payload(sid, yy, mm)) for yy, mm in months)
         n_months = sum(
             fredgen.expected_month(self.feed.payload(sid, yy, mm)) is not None
@@ -292,6 +307,8 @@ class FredMonthly(Workload):
             errs.append(f"{sid} run_series counts {res.counts} != {want_counts}")
         if res.sheet_dups:
             errs.append(f"{sid} {y}: {res.sheet_dups} duplicate sheet rows")
+        if res.manifest_dups:
+            errs.append(f"{sid} {y}: {res.manifest_dups} duplicate manifest rows")
         new_row = m in want
         if res.appended != int(new_row):
             errs.append(f"{sid} {y}-{m}: sheet appended {res.appended}, want {int(new_row)}")
@@ -299,11 +316,15 @@ class FredMonthly(Workload):
             errs.append(f"{sid} {y}-{m}: the month was never fetched")
         return errs
 
-    def corrupt(self, res: MonthResult) -> MonthResult:
+    STORES = ("gold", "manifest", "derby", "sheet")
+
+    def corrupt(self, res: MonthResult, k: int) -> MonthResult:
+        """Shift one month's value by 0.01 in store ``STORES[k % 4]``."""
         self._serving_state(res)
-        m = next(iter(res.gold), res.month)
-        v, c = res.gold.get(m, (0.0, 0))
-        res.gold[m] = ((v or 0.0) + 0.01, c)
+        rows = getattr(res, self.STORES[k % len(self.STORES)])
+        m = next(iter(rows), res.month)
+        v, c = rows.get(m, (0.0, 0))
+        rows[m] = ((v or 0.0) + 0.01, c)
         return res
 
     def install_wrappers(self) -> None:
@@ -387,19 +408,20 @@ LLM_QUERIES = (
 
 
 class CorpusCuration(Workload):
-    """A seeded sequence over a fixed op mix: the curation job and four
-    registered LLM-data queries, in rounds of a reshuffled permutation so
-    every seed runs the same composition. A query op builds the plan and
-    collects the result, whose digest must equal the DuckDB oracle's; the
-    job's per-split counts must equal the oracle's recomputation.
+    """One op is one curation cycle: the curation job and four registered
+    LLM-data queries, in a seeded order per cycle. A query step builds the
+    plan and collects the result, whose digest must equal the DuckDB
+    oracle's; the job's per-split counts must equal the oracle's
+    recomputation.
 
-    The mix has an odd number of kinds on purpose: with balanced rounds
-    the median op then falls inside the middle kind's cluster of times,
-    not in the gap between two clusters, where it would swing with
-    either cluster's edge."""
+    The op is the whole cycle, not one step, because single steps vary by
+    about 20% from one run of a step to the next on a shared 4-core host
+    while the cycle's sum varies far less, and the steps' times differ by
+    up to 8x, so a median over single steps would be the time of whichever
+    kind sits in the middle."""
 
     name = "corpus_curation"
-    ops = (CURATION_JOB,) + LLM_QUERIES
+    steps = (CURATION_JOB,) + LLM_QUERIES
 
     def setup(self, work_dir: str) -> None:
         import duckdb
@@ -422,33 +444,21 @@ class CorpusCuration(Workload):
             ).fetchone()
         finally:
             con.close()
-        self.sequence: list[str] = []
-
-    def round_len(self) -> int:
-        return len(self.ops)
-
-    def op_label(self, i: int) -> str:
-        if i < 0:  # warm-up ops
-            return self.ops[(-1 - i) % len(self.ops)]
-        while len(self.sequence) <= i:
-            block = list(self.ops)
-            self.rng.shuffle(block)
-            self.sequence += block
-        return self.sequence[i]
 
     def warmup(self) -> None:
-        # two rounds: after one, the next round still runs ~15% slower
-        # than the one after it (JIT), and a run measures one or two
-        for k in range(2 * len(self.ops)):
-            errs = self.check(self.run_op(-1 - k))
-            if errs:
-                raise RuntimeError(f"warm-up op failed its check: {errs[:3]}")
+        # one curation job: the session's first step carries its cold
+        # start (Python workers, JIT of the shared paths), ~13 s against
+        # ~4.5 s warm. Each query's own first-run cost (up to ~1 s) stays
+        # in the first timed cycle, the same in every run
+        errs = self.check([self._step(CURATION_JOB)])
+        if errs:
+            raise RuntimeError(f"warm-up op failed its check: {errs[:3]}")
 
-    def run_op(self, i: int):
+    def _step(self, name: str):
         from fred_economic_data_pipeline_local_spark import jobs
         from fred_economic_data_pipeline_local_spark.plans import all_queries
 
-        name, t = self.op_label(i), self.tracer
+        t = self.tracer
         if name == CURATION_JOB:
             with t.span("jobs.run_curation_job", counted=True):
                 counts = jobs.run_curation_job(
@@ -456,14 +466,21 @@ class CorpusCuration(Workload):
                     self.curated_root,
                 )
             return name, counts
-        with t.span("plans.build", counted=True):
+        with t.span(f"{name}.build", counted=True):
             df = all_queries()[name](self.spark, self.data_dir)
-        with t.span("plans.collect", counted=True):
+        with t.span(f"{name}.collect", counted=True):
             rows = df.collect()
         return name, digest(df.columns, rows)
 
-    def check(self, res) -> list[str]:
-        name, got = res
+    def run_op(self, i: int) -> list:
+        order = list(self.steps)
+        self.rng.shuffle(order)
+        return [self._step(name) for name in order]
+
+    def check(self, res: list) -> list[str]:
+        return [e for step in res for e in self._check_step(*step)]
+
+    def _check_step(self, name: str, got) -> list[str]:
         if name != CURATION_JOB:
             want = self.expected[name]
             if got != want:
@@ -485,11 +502,20 @@ class CorpusCuration(Workload):
             errs.append(f"curation split counts {got} differ from the oracle")
         return errs
 
-    def corrupt(self, res):
-        name, got = res
+    def corrupt(self, res: list, k: int) -> list:
+        """Corrupt step ``k % 5`` of the cycle. Even ``k``: a row or doc
+        count off by one; odd ``k``: the right count with a wrong hash, or
+        one held-out doc missing."""
+        res = list(res)
+        j = k % len(res)
+        name, got = res[j]
         if name != CURATION_JOB:
-            return name, (got[0] + 1, got[1])
-        return name, {**got, "train": got.get("train", 0) - 1}
+            got = (got[0], got[1][::-1]) if k % 2 else (got[0] + 1, got[1])
+        else:
+            split = "benchmark" if k % 2 else "train"
+            got = {**got, split: got.get(split, 0) - 1}
+        res[j] = (name, got)
+        return res
 
     def install_wrappers(self) -> None:
         import importlib
@@ -506,23 +532,25 @@ class CorpusCuration(Workload):
 
         dur = _durations(spans)
         tree = subtree(spans, root)
-        name = root.result[0]
+        n_q = len(LLM_QUERIES)
+
+        def per_query(attr: str) -> float:
+            return sum(getattr(s, attr) for s in tree
+                       if s.name.endswith((".build", ".collect"))) / n_q
+
         out = {
             "catalog.load_table_s": dur("catalog.load_table"),
             "curation.stages_per_op": sum(s.stages for s in tree),
+            "curation_job.run_s": dur("jobs.run_curation_job"),
+            "plans.build_s": sum(dur(f"{q}.build") for q in LLM_QUERIES) / n_q,
+            "plans.collect_s": sum(dur(f"{q}.collect") for q in LLM_QUERIES) / n_q,
+            "plans.spark_jobs_per_query": per_query("jobs"),
+            "plans.stages_per_query": per_query("stages"),
+            "plans.tasks_per_query": per_query("tasks"),
         }
-        if name == CURATION_JOB:
-            out["curation_job.run_s"] = dur("jobs.run_curation_job")
-        else:
-            out.update({
-                f"{name}.build_s": dur("plans.build"),
-                f"{name}.collect_s": dur("plans.collect"),
-                "plans.build_s": dur("plans.build"),
-                "plans.collect_s": dur("plans.collect"),
-                "plans.spark_jobs_per_query": sum(s.jobs for s in tree),
-                "plans.stages_per_query": sum(s.stages for s in tree),
-                "plans.tasks_per_query": sum(s.tasks for s in tree),
-            })
+        for q in LLM_QUERIES:
+            out[f"{q}.build_s"] = dur(f"{q}.build")
+            out[f"{q}.collect_s"] = dur(f"{q}.collect")
         return out
 
 
