@@ -8,11 +8,22 @@ reference's catchup/backfill semantics without a scheduler).
 
 Config format mirrors config/fred_indicators.yaml: a list of entries with
 series_id, name, start_date, end_date, table_name, sheet_name.
+
+A series run is window-scoped, like the reference's ``@monthly`` catch-up
+run (extract one month, transform that month, re-aggregate that year):
+silver is rebuilt from the bronze months inside ``[start_date, end_date]``
+and gold from the silver months of the years that window touches. Both
+scopes are predicates on the partition columns, so the scans read only
+those partitions and the dynamic-overwrite sinks replace only them; every
+other silver month and gold year keeps its files and its
+``processed_at``/``aggregated_at`` stamps. A backfill is the same call
+with a wide window. The returned counts are whole-indicator.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date, datetime
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +33,7 @@ from .operators.fred import format_observations, gold_aggregate, silver_transfor
 from .sources.extract import Fetcher, fetch_observations, month_ranges
 from .sources.lake import (
     read_bronze,
+    read_gold,
     read_silver,
     write_bronze,
     write_gold,
@@ -61,6 +73,26 @@ def load_catalog(path: str) -> list[SeriesConfig]:
     return out
 
 
+def _window(cfg: SeriesConfig) -> tuple[date, date]:
+    """Parse the run window; an entry without a usable window must fail
+    here rather than fetch nothing and rebuild nothing."""
+    bounds = []
+    for field in ("start_date", "end_date"):
+        raw = getattr(cfg, field)
+        try:
+            bounds.append(datetime.strptime(raw, "%Y-%m-%d").date())
+        except (TypeError, ValueError):
+            raise ValueError(
+                f"series {cfg.series_id!r}: {field} {raw!r} is not a YYYY-MM-DD date"
+            ) from None
+    start, end = bounds
+    if start > end:
+        raise ValueError(
+            f"series {cfg.series_id!r}: start_date {start} is after end_date {end}"
+        )
+    return start, end
+
+
 def run_series(
     spark: SparkSession,
     cfg: SeriesConfig,
@@ -69,35 +101,52 @@ def run_series(
 ) -> dict[str, int]:
     """One series end-to-end: extract -> bronze -> silver -> gold.
 
-    Returns per-layer row counts. Serving loads (RDS upsert / sheet
-    append) are separate calls on the gold output (sources/serving.py) so
+    Only what the ``[start_date, end_date]`` window touches is rebuilt:
+    silver from the bronze months inside the window, gold from the silver
+    months of every year the window touches (a Dec->Jan window rebuilds
+    both years). Only those rows get new ``processed_at``/``aggregated_at``
+    stamps, as in the reference. Observations a fetcher returns outside
+    the window still land in bronze, but reach silver only when a window
+    covering them runs (FRED's ``observation_start``/``observation_end``
+    keep its responses inside the window). Raises ``ValueError`` naming
+    the series when a window bound is missing, unparseable or reversed.
+
+    Returns whole-indicator bronze/silver/gold row counts, not counts of
+    the rebuilt scope. Serving loads (RDS upsert / sheet append) are
+    separate calls on the gold output (sources/serving.py) so
     environments without those stores can still run the lake pipeline.
     """
+    start, end = _window(cfg)
     stamp = now_iso_utc()
 
-    ranges = month_ranges(spark, cfg.start_date, cfg.end_date)
+    ranges = month_ranges(spark, start.isoformat(), end.isoformat())
     raw = fetch_observations(ranges, cfg.series_id, fetcher)
     bronze = format_observations(raw, cfg.series_id, ingested_at_iso=stamp)
     write_bronze(bronze, lake_root)
 
-    # parameterized predicate, not interpolated SQL: series_id is config
-    # input and must never reach the parser as text
-    bronze_back = read_bronze(spark, lake_root).where(
-        F.col("indicator") == F.lit(cfg.series_id)
+    # parameterized predicates, not interpolated SQL: series_id is config
+    # input and must never reach the parser as text. The scopes reference
+    # only partition columns, so they prune the scans to the window.
+    indicator = F.col("indicator") == F.lit(cfg.series_id)
+    year = F.col("observation_year")
+    month_index = year * 12 + F.col("observation_month")
+    in_window = month_index.between(
+        start.year * 12 + start.month, end.year * 12 + end.month
     )
-    silver = silver_transform(bronze_back, processed_at_iso=stamp)
+    in_years = year.between(start.year, end.year)
+
+    bronze_back = read_bronze(spark, lake_root).where(indicator)
+    silver = silver_transform(bronze_back.where(in_window), processed_at_iso=stamp)
     write_silver(silver, lake_root)
 
-    silver_back = read_silver(spark, lake_root).where(
-        F.col("indicator") == F.lit(cfg.series_id)
-    )
-    gold = gold_aggregate(silver_back, aggregated_at_iso=stamp)
+    silver_back = read_silver(spark, lake_root).where(indicator)
+    gold = gold_aggregate(silver_back.where(in_years), aggregated_at_iso=stamp)
     write_gold(gold, lake_root)
 
     return {
         "bronze": bronze_back.count(),
         "silver": silver_back.count(),
-        "gold": gold.count(),
+        "gold": read_gold(spark, lake_root).where(indicator).count(),
     }
 
 

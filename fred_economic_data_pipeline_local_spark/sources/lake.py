@@ -13,8 +13,13 @@ aggregate_fred_data.py:123)
 
 100 TB notes: partition columns are low-cardinality (indicator x year x
 month), so a single ``repartition`` on the partition keys before write
-yields one file per partition without small-file explosion; readers filter
-on partition columns so Catalyst prunes directories before listing files.
+yields one file per partition without small-file explosion. Each ``read_*``
+lists every file under its layer root eagerly, when the DataFrame is
+created; a filter on partition columns then prunes the listed partitions,
+so it narrows what a scan reads, not what is listed. Callers scope their
+reads that way (``jobs.run_series`` rebuilds only the silver months and
+gold years its window touches), and the dynamic-overwrite sinks then
+replace only the partitions present in the written frame.
 
 Every overwrite writer sets ``partitionOverwriteMode=dynamic`` per-write
 (not via session conf) so only the partitions present in ``df`` are
@@ -27,6 +32,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import BRONZE_SCHEMA, GOLD_SCHEMA, SILVER_SCHEMA
@@ -37,16 +43,25 @@ GOLD_PARTITIONS = ["indicator", "observation_year"]
 
 def write_bronze(df: DataFrame, root: str) -> None:
     """K1: JSON-lines, Hive-partitioned, dynamic overwrite
-    (extract_fred_data.py:195-236; replace=True at :225)."""
-    if df.isEmpty():  # empty short-circuit parity (F3)
-        return
-    (
-        df.repartition(*BRONZE_PARTITIONS)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*BRONZE_PARTITIONS)
-        .json(os.path.join(root, "raw_data"))
-    )
+    (extract_fred_data.py:195-236; replace=True at :225).
+
+    ``df`` is usually a fetch (``extract.fetch_observations``), so it is
+    persisted for the duration of the call: the empty check and the write
+    read the same rows and each month range is fetched once, not once per
+    action."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if df.isEmpty():  # empty short-circuit parity (F3)
+            return
+        (
+            df.repartition(*BRONZE_PARTITIONS)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*BRONZE_PARTITIONS)
+            .json(os.path.join(root, "raw_data"))
+        )
+    finally:
+        df.unpersist()
 
 
 def read_bronze(spark: SparkSession, root: str) -> DataFrame:

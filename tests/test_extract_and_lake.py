@@ -170,3 +170,26 @@ def test_lake_empty_write_guard(spark, tmp_path):
     import os
 
     assert not os.path.exists(os.path.join(root, "raw_data"))
+
+
+def test_write_bronze_fetches_each_range_once(spark, tmp_path):
+    """The empty-input guard and the write read the same fetched rows:
+    one fetcher call per month range, not one per action."""
+    log = tmp_path / "fetches.log"
+
+    def fetcher(series_id, start, end):
+        with open(log, "a") as fh:
+            fh.write(f"{start} {end}\n")
+        return [{"date": start, "value": "1.0"}]
+
+    ranges = month_ranges(spark, "2024-01-01", "2024-03-31")
+    bronze = format_observations(
+        fetch_observations(ranges, "UNRATE", fetcher), "UNRATE", ingested_at_iso=STAMP
+    )
+    write_bronze(bronze, str(tmp_path / "lake"))
+    assert sorted(log.read_text().splitlines()) == [
+        "2024-01-01 2024-01-31",
+        "2024-02-01 2024-02-29",
+        "2024-03-01 2024-03-31",
+    ]
+    assert read_bronze(spark, str(tmp_path / "lake")).count() == 3
